@@ -1510,11 +1510,10 @@ def refresh_manifest_incr(incr, corpus_digests, lang_map, ckpt=None):
     run ONCE instead of once per consumer. Defaults to the dedup
     family's lazy DISK_ONLY `_ckpt`; the streaming twin passes its
     CheckpointChain.step so every block is freed at chain.close().
-    ADVICE r13 (batch-path block hygiene): the default `_ckpt` now
-    registers each block with the session reaper, so sweep harnesses
-    free the batch twin's two per-invocation checkpoints
-    deterministically (session.reap_registered); drivers that never
-    reap keep the GC/ContextCleaner backstop, as before."""
+    The default `_ckpt` registers each block with the session's block
+    registry (`session.reap_later`), so sweep harnesses free the batch
+    twin's two per-invocation checkpoints deterministically; drivers
+    that never reap keep the GC/ContextCleaner backstop."""
     from sparkml_spark.operators.llm_dedup import _DUP_OFFSET, _ckpt, _norm
 
     if ckpt is None:

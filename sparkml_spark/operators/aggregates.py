@@ -29,6 +29,7 @@ from sparkml_spark.registry import (
     lsum_sql,
     query,
 )
+from sparkml_spark.session import reap_later
 from sparkml_spark.sources.loader import load_table, load_tables
 
 
@@ -1710,10 +1711,9 @@ def agg_audience_overlap(spark, sf_dir):
     ≤ a few dozen in any real taxonomy — bounded, the COOCCUR_CAP
     argument), then aggregates onto a types² matrix."""
     e = load_table(spark, sf_dir, "events")
-    aud = e.select(F.col("event_type").alias("t"), F.col("user_id").alias("u")).distinct().cache()
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(aud)
+    aud = reap_later(
+        e.select(F.col("event_type").alias("t"), F.col("user_id").alias("u")).distinct().cache()
+    )
     sizes = aud.groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("n"))
     a = aud.select(F.col("t").alias("type_a"), "u")
     b = aud.select(F.col("t").alias("type_b"), "u")

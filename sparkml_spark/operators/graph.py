@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import query
+from sparkml_spark.session import reap_later
 from sparkml_spark.sources.loader import load_table
 
 
@@ -176,7 +177,7 @@ def graph_pagerank(spark, sf_dir):
         .distinct()
         .cache()
     )
-    from sparkml_spark.session import CheckpointChain, register_reapable_cache
+    from sparkml_spark.session import CheckpointChain
 
     # Round 12: route the per-iteration checkpoints through the chain
     # so superseded iterations' blocks are freed (unpersist on the
@@ -213,9 +214,8 @@ def graph_pagerank(spark, sf_dir):
         chain.reap()  # the superseded iteration's 25-row blocks
     # the FINAL iteration's checkpoint feeds the returned frame — hand
     # it (and the three caches above) to the sweep-boundary reaper
-    chain.release_to_registry()
-    for df in (edges, norm, nodes):
-        register_reapable_cache(df)
+    for df in (edges, norm, nodes, ranks):
+        reap_later(df)
     return ranks.select("node", F.round("rank", 6).alias("pagerank"))
 
 
@@ -353,10 +353,8 @@ def graph_triangle_count(spark, sf_dir):
     Output: one row of graph invariants incl. the global clustering
     coefficient 3*triangles/wedges (single exact int division,
     rounded at 6dp on both engines)."""
-    from sparkml_spark.session import register_reapable_cache
 
-    e = _cooccur_edges(spark, sf_dir).cache()
-    register_reapable_cache(e)
+    e = reap_later(_cooccur_edges(spark, sf_dir).cache())
     und = e.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
         e.select(F.col("b").alias("s"), F.col("a").alias("t"))
     )
@@ -368,7 +366,7 @@ def graph_triangle_count(spark, sf_dir):
     smaller_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    o = (
+    o = reap_later(
         e.join(da, "a")
         .join(db, "b")
         .select(
@@ -377,7 +375,6 @@ def graph_triangle_count(spark, sf_dir):
         )
         .cache()
     )
-    register_reapable_cache(o)
     e1 = o.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     e2 = o.select(F.col("src").alias("v"), F.col("dst").alias("w"))
     e3 = o.select(F.col("src").alias("u"), F.col("dst").alias("w"))
@@ -463,13 +460,11 @@ def graph_label_propagation(spark, sf_dir):
     run on the aggregated edge list (graph-sized), each round one
     groupBy + one window on <= |E| rows; the raw event log is touched
     once, inside the shared edge extraction."""
-    from sparkml_spark.session import register_reapable_cache
 
     e = _cooccur_edges(spark, sf_dir)
-    und = e.select(
+    und = reap_later(e.select(
         F.col("a").alias("s"), F.col("b").alias("t"), "w"
-    ).unionAll(e.select(F.col("b").alias("s"), F.col("a").alias("t"), "w")).cache()
-    register_reapable_cache(und)
+    ).unionAll(e.select(F.col("b").alias("s"), F.col("a").alias("t"), "w")).cache())
     labs = und.select(F.col("s").alias("node")).distinct().select(
         "node",
         F.when(F.col("node") % 3 == 0, (F.col("node") % 7).cast("long")).alias("lab"),
@@ -487,8 +482,7 @@ def graph_label_propagation(spark, sf_dir):
         # cannot be freed mid-build because the lazy caches only
         # materialize (and are re-read by the next round) at the
         # query's first action.
-        labs = labs.cache()
-        register_reapable_cache(labs)
+        labs = reap_later(labs.cache())
         cand = (
             und.join(
                 labs.filter(F.col("lab").isNotNull()).withColumnRenamed("node", "t"),
@@ -557,14 +551,11 @@ def graph_jaccard_links(spark, sf_dir):
     so candidate generation is sum-of-squares over CAPPED bucket
     memberships, not over raw hub degrees; the top-50 is a
     TakeOrderedAndProject, never a global sort materialization."""
-    from sparkml_spark.session import register_reapable_cache
 
-    e = _cooccur_edges(spark, sf_dir).cache()
-    nb = e.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
+    e = reap_later(_cooccur_edges(spark, sf_dir).cache())
+    nb = reap_later(e.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
         e.select(F.col("b").alias("s"), F.col("a").alias("t"))
-    ).cache()
-    register_reapable_cache(e)
-    register_reapable_cache(nb)
+    ).cache())
     deg = nb.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
@@ -654,10 +645,8 @@ def graph_kcore_membership(spark, sf_dir):
     Scale: iterate-small — every round is one degree aggregation and
     one semi-join on the (graph-sized, capped) edge list; the raw
     event log is touched once in the shared extraction."""
-    from sparkml_spark.session import register_reapable_cache
 
-    e = _cooccur_edges(spark, sf_dir).select("a", "b").cache()
-    register_reapable_cache(e)
+    e = reap_later(_cooccur_edges(spark, sf_dir).select("a", "b").cache())
     nodes = (
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
@@ -673,8 +662,7 @@ def graph_kcore_membership(spark, sf_dir):
         # (measured 53 s -> ~8 s at sf0.01). Superseded rounds go to
         # the sweep-boundary reaper (they can't be freed mid-build:
         # the lazy caches materialize at the query's first action).
-        surv = surv.cache()
-        register_reapable_cache(surv)
+        surv = reap_later(surv.cache())
         ea = e.join(surv.withColumnRenamed("node", "a"), "a").join(
             surv.withColumnRenamed("node", "b"), "b"
         )

@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import dsum, dsum_sql, query
+from sparkml_spark.session import ARTIFACT_ROOT
 from sparkml_spark.sources.loader import load_table, load_tables
 
 
@@ -619,7 +620,7 @@ def _dpp_artifact(spark, sf_dir):
     """Write (once per sf_dir) the partitioned fact layout DPP needs."""
     import os
 
-    path = os.path.join("/root/repo/.artifacts", f"documents_dpp_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = os.path.join(ARTIFACT_ROOT, f"documents_dpp_{os.path.basename(sf_dir.rstrip('/'))}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         d = load_table(spark, sf_dir, "documents")
         d.select("doc_id", "n_chars", "lang").write.mode("overwrite").partitionBy(

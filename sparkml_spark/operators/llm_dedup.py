@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from sparkml_spark.operators.llm_text import _gram_idx
 from sparkml_spark.registry import ZERO_VIOLATIONS, md5_chunk16, query
+from sparkml_spark.session import reap_later, session_artifact
 from sparkml_spark.sources.loader import load_table
 
 #: Offset that turns a copied doc_id into a synthetic duplicate's id.
@@ -297,15 +298,7 @@ def _ckpt(df):
     must disable executor decommissioning of storage blocks."""
     from pyspark.storagelevel import StorageLevel
 
-    from sparkml_spark.session import register_reapable
-
-    out = df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    # r14 (VERDICT r13 #2): record the block-owning RDD id so sweep
-    # harnesses can free it deterministically between queries instead
-    # of waiting on the GC/ContextCleaner backstop (which remains the
-    # fallback for drivers that never call reap_registered).
-    register_reapable(out)
-    return out
+    return reap_later(df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY))
 
 
 def jaccard_pairs(corpus, threshold: float = 0.6):
@@ -376,35 +369,24 @@ def dedup_near_minhash(spark, sf_dir):
     # LSH candidate density comes from corpus homogeneity instead —
     # every doc shares common shingles, so pairwise Jaccard is high
     # corpus-wide and candidates are inherently dense).
-    # r14 (VERDICT r13 #1): both fitted artifacts are memoized per
-    # session — dedup_minhash_recall_bound re-runs this whole query in
-    # the same session, refitting an identical vocabulary (one full
-    # shingling pass) and an identical seed-42 hash draw. One fit per
-    # session; a fresh process always refits from parquet.
-    import os
-
-    from sparkml_spark.session import session_artifact
-
-    cv = session_artifact(
-        spark,
-        ("dedup_nearmh_cv", os.path.realpath(sf_dir)),
-        lambda: CountVectorizer(
-            inputCol="shingles", outputCol="features", binary=True, minDF=1.0, maxDF=0.5
-        ).fit(shingled),
+    # Both fitted artifacts are memoized per session:
+    # dedup_minhash_recall_bound re-runs this whole query in the same
+    # session, refitting an identical vocabulary (one full shingling
+    # pass) and an identical seed-42 hash draw.
+    cv_est = CountVectorizer(
+        inputCol="shingles", outputCol="features", binary=True, minDF=1.0, maxDF=0.5
     )
+    cv = session_artifact(spark, (cv_est, shingled), lambda: cv_est.fit(shingled))
     # r13 (guide §2.4): approxSimilarityJoin(vecs, vecs, ...) plants
     # `vecs` in BOTH plan branches, so the shingling + vocabulary
     # lookup ran twice per execution. Lazy DISK_ONLY checkpoint (the
     # family's _ckpt pattern) computes it once; the LSH join reads
     # blocks. Sketch output unchanged — same fitted model, same seed.
     vecs = _ckpt(cv.transform(shingled))
-    model = session_artifact(
-        spark,
-        ("dedup_nearmh_lsh", os.path.realpath(sf_dir)),
-        lambda: MinHashLSH(
-            inputCol="features", outputCol="hashes", numHashTables=8, seed=42
-        ).fit(vecs),
-    )
+    # keyed on what `vecs` is derived from: the checkpoint carries a
+    # fresh RDD id per build, and the vocabulary lookup a fresh UDF
+    mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
+    model = session_artifact(spark, (mh, cv_est, shingled), lambda: mh.fit(vecs))
     pairs = model.approxSimilarityJoin(vecs, vecs, 0.4, distCol="jaccard_dist")
     return (
         pairs.select(
@@ -1135,8 +1117,8 @@ def cc_min_label(edges, max_rounds: int = 40):
         labels = doubled
         if changed == 0:
             # the FINAL generation feeds the returned frame — hand it
-            # to the sweep-boundary reaper (r14, VERDICT r13 #2)
-            chain.release_to_registry()
+            # to the sweep-boundary reaper
+            reap_later(labels)
             return labels, rounds_used
     raise RuntimeError(
         f"cc_min_label did not converge within {max_rounds} rounds — "
@@ -2388,7 +2370,7 @@ def dedup_cascade_keep(spark, sf_dir):
     cascade cost = sum of stage costs, no cross-stage blow-up."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    corpus = (
+    corpus = reap_later(
         d.unionByName(
             d.filter(F.col("doc_id") % 10 == 0).select(
                 (F.col("doc_id") + _DUP_OFFSET).alias("doc_id"), "text"
@@ -2398,11 +2380,8 @@ def dedup_cascade_keep(spark, sf_dir):
                 (F.col("doc_id") + 2 * _DUP_OFFSET).alias("doc_id"),
                 F.array_join(F.slice(toks, 1, F.size(toks) - 3), " ").alias("text"),
             )
-        )
-    ).cache()
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(corpus)
+        ).cache()
+    )
     hashed = corpus.select("doc_id", _norm().alias("h"))
     grp = hashed.groupBy("h").agg(F.min("doc_id").alias("canon"))
     ex = hashed.join(grp, "h").select("doc_id", "canon")

@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import ZERO_VIOLATIONS, md5_chunk16, query
+from sparkml_spark.session import reap_later
 from sparkml_spark.sources.loader import load_table
 
 _SEQ_TOKENS = 512  # sequence-pack token budget
@@ -2558,7 +2559,7 @@ def pipeline_release_gate(spark, sf_dir):
     per doc; every manifest number is a partial-aggregating fold or
     a quasi-identifier histogram over that single projection."""
     d = load_table(spark, sf_dir, "documents")
-    norm = d.select(
+    norm = reap_later(d.select(
         "lang",
         "source",
         "n_chars",
@@ -2566,10 +2567,7 @@ def pipeline_release_gate(spark, sf_dir):
         F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .cast("long")
         .alias("toks"),
-    ).cache()
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(norm)
+    ).cache())
     n_docs = norm.agg(F.count(F.lit(1)).cast("long").alias("value")).select(
         F.lit("corpus").alias("artifact"), F.lit("n_docs").alias("metric"), "value"
     )

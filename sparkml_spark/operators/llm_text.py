@@ -20,6 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import dsum, dsum_sql, query
+from sparkml_spark.session import reap_later
 from sparkml_spark.sources.loader import load_table
 
 #: Stopwords drawn from the fixture's real token pool.
@@ -1952,7 +1953,7 @@ def text_tfidf_knn(spark, sf_dir):
     )
     df = toks.groupBy("token").agg(F.countDistinct("doc_id").cast("long").alias("df"))
     n = F.broadcast(d.agg(F.count(F.lit(1)).alias("n_docs")))
-    w = (
+    w = reap_later(
         tf.join(F.broadcast(df), "token")
         .crossJoin(n)
         # df-cut at 90% here, NOT the family's 50%: the fixture's
@@ -1974,9 +1975,6 @@ def text_tfidf_knn(spark, sf_dir):
         )
         .cache()
     )
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(w)
     norms = w.groupBy("doc_id").agg(
         F.sqrt(
             F.sum((F.col("wm") * F.col("wm")).cast("decimal(38,0)")).cast("double")

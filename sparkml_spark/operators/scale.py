@@ -16,9 +16,10 @@ import os
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import dsum, dsum_sql, query
+from sparkml_spark.session import ARTIFACT_ROOT, reap_later
 from sparkml_spark.sources.loader import load_table
 
-_WAREHOUSE = "/root/repo/.artifacts/warehouse"
+_WAREHOUSE = os.path.join(ARTIFACT_ROOT, "warehouse")
 _N_BUCKETS = 8
 _N_SALTS = 8
 
@@ -259,7 +260,7 @@ def cache_hot_dim_reuse(spark, sf_dir):
     recompute is a full table pass. The grand total rides back as a
     broadcast nested-loop of a 1-row relation, not a collect."""
     o = load_table(spark, sf_dir, "orders")
-    hot = (
+    hot = reap_later(
         o.groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -267,9 +268,6 @@ def cache_hot_dim_reuse(spark, sf_dir):
         )
         .cache()
     )
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(hot)
     total = hot.agg(dsum("spent").alias("grand_total"))
     return hot.crossJoin(F.broadcast(total)).select(
         "o_custkey",

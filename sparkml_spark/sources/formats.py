@@ -24,14 +24,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkml_spark.registry import ZERO_VIOLATIONS, query
+from sparkml_spark.session import ARTIFACT_ROOT
 from sparkml_spark.sources.loader import load_table
 
-_ARTIFACTS = "/root/repo/.artifacts"
-
-
 def _artifact(name: str) -> str:
-    os.makedirs(_ARTIFACTS, exist_ok=True)
-    return os.path.join(_ARTIFACTS, name)
+    os.makedirs(ARTIFACT_ROOT, exist_ok=True)
+    return os.path.join(ARTIFACT_ROOT, name)
 
 
 _NATION_SCHEMA = T.StructType(

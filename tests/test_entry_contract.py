@@ -196,13 +196,15 @@ def test_sim_canon_mirrors_driver_array_failure():
     dies — pandas sort_values over ndarray-valued cells — so an ORACLE
     query with an array result column fails in the sim BEFORE the
     driver finds it (the r4 agg_collect_sorted_array gap)."""
+    import os
     import sys
 
     import numpy as np
     import pandas as pd
     import pytest
 
-    sys.path.insert(0, "/root/repo/scripts")
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.join(os.path.dirname(tests_dir), "scripts"))
     from driver_sim import canon
 
     ok = canon(pd.DataFrame({"b": [2, 1], "a": ["y", "x"]}))
@@ -316,7 +318,10 @@ def test_survey_registry_bijection():
     import sparkml_spark.operators  # noqa: F401
     from sparkml_spark.registry import QUERIES
 
-    survey = open("/root/repo/SURVEY.md").read()
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    survey = open(os.path.join(repo, "SURVEY.md")).read()
     undocumented = sorted(n for n in QUERIES if n not in survey)
     assert not undocumented, (
         f"{len(undocumented)} registered ids missing from SURVEY.md "

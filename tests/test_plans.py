@@ -1033,19 +1033,21 @@ def test_r11_wave16_plan_shapes(spark):
     broadcast the ring onto two corpus crossJoins and self-joined the
     results) and exactly ONE shuffle — the 16-row shard rollup, which
     must map-side combine."""
-    import re
-
     ring = QUERIES["pipeline_consistent_hash_ring"](spark, SF_DIR)
     plan = ring._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan[:2000]
     # count exchanges on the simple plan string: the formatted
     # explain (shuffle_count) truncates plans carrying the folded
     # 128/136-element ring literals and loses the Exchange line.
-    # ADVICE r13: a ReusedExchange line embeds the text "Exchange
-    # hashpartitioning" without adding a shuffle, so count only
-    # non-reuse occurrences (lookbehind), keeping the gate meaningful
-    # under exchange reuse or AQE replanning.
-    n_shuffles = len(re.findall(r"(?<!Reused)Exchange hashpartitioning", plan))
+    # A ReusedExchange line reads "ReusedExchange [...], Exchange
+    # hashpartitioning" without adding a shuffle, so count per line
+    # and skip reuse lines, keeping the gate exact under exchange
+    # reuse or AQE replanning.
+    n_shuffles = sum(
+        1
+        for line in plan.splitlines()
+        if "Exchange hashpartitioning" in line and "ReusedExchange" not in line
+    )
     assert n_shuffles == 1, plan[:2000]
     assert has_partial_aggregate(ring)
 

@@ -6,7 +6,9 @@ registered, and a reaped query recomputes correctly when re-built.
 Also pins the r14 session-artifact memo (VERDICT r13 #1/#3): a second
 invocation of a fit-heavy query in the same session must reuse the
 session's fitted artifact (identity-equal model object), and its output
-must be identical to the first invocation's.
+must be identical to the first invocation's. The memo key fingerprints
+the fit's inputs, so a changed training frame refits instead of sharing,
+and an emptied memo refits to the same output.
 """
 
 from __future__ import annotations
@@ -67,10 +69,12 @@ def test_session_artifact_memo_shares_fits(spark):
     from sparkml_spark.session import _ARTIFACTS, reap_registered
 
     app = spark.sparkContext.applicationId
+    _ARTIFACTS.clear()  # an earlier test may already hold this fit
+    before = set(_ARTIFACTS)
     df1 = QUERIES["ml_classify_logistic"](spark, SF_DIR)
     r1 = sorted(tuple(r) for r in df1.collect())
-    keys = [k for k in _ARTIFACTS if k[0] == app and "lr25_reg01" in k]
-    assert keys, "expected the lr25 fit to be memoized"
+    keys = [k for k in set(_ARTIFACTS) - before if k[0] == app]
+    assert keys, "expected the logistic fit to be memoized"
     model_first = _ARTIFACTS[keys[0]]
 
     # the bound twin audits the SAME fitted object, and the base query
@@ -82,3 +86,94 @@ def test_session_artifact_memo_shares_fits(spark):
     bound = QUERIES["ml_fit_quality_bound"](spark, SF_DIR)
     assert [r["n_violations"] for r in bound.collect()] == [0]
     reap_registered(spark)
+
+
+def test_memo_refits_on_changed_input(spark):
+    """The memo key fingerprints the training frame: the same estimator
+    fit on a filtered input is a new entry and a different model, and
+    rebuilding the original input hits the original entry."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.sql import functions as F
+
+    from sparkml_spark.operators.ml import _features, _train_test
+    from sparkml_spark.session import _ARTIFACTS, session_artifact
+
+    def fit(train):
+        lr = LogisticRegression(maxIter=5, regParam=0.01)
+        return session_artifact(spark, (lr, train), lambda: lr.fit(train))
+
+    train, _test = _train_test(_features(spark, SF_DIR))
+    m1 = fit(train)
+    n = len(_ARTIFACTS)
+    m2 = fit(train.filter(F.col("vec_id") > 3))
+    assert len(_ARTIFACTS) == n + 1
+    assert m2 is not m1
+    train_again, _ = _train_test(_features(spark, SF_DIR))
+    assert fit(train_again) is m1
+    assert len(_ARTIFACTS) == n + 1
+
+
+def test_estimator_fingerprint_ignores_uids_and_sees_nested_params(spark):
+    """Estimators fingerprint by class and param values, recursing into
+    a tuning estimator's estimator, evaluator and grid: rebuilding one
+    with fresh uids matches, changing a nested value does not."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
+
+    from sparkml_spark.session import _fingerprint
+
+    def cv(max_iter=15, grid=(0.01, 0.5)):
+        lr = LogisticRegression(maxIter=max_iter)
+        return CrossValidator(
+            estimator=lr,
+            estimatorParamMaps=ParamGridBuilder().addGrid(lr.regParam, list(grid)).build(),
+            evaluator=MulticlassClassificationEvaluator(metricName="accuracy"),
+            numFolds=2,
+        )
+
+    app = spark.sparkContext.applicationId
+    base = _fingerprint(app, cv())
+    assert _fingerprint(app, cv()) == base
+    assert _fingerprint(app, cv(max_iter=16)) != base
+    assert _fingerprint(app, cv(grid=(0.01, 0.4))) != base
+
+
+def test_memo_shares_fit_between_query_and_bound_twin(spark):
+    from sparkml_spark.registry import QUERIES
+    from sparkml_spark.session import _ARTIFACTS
+
+    _ARTIFACTS.clear()
+    QUERIES["ml_classify_logistic"](spark, SF_DIR)
+    first = dict(_ARTIFACTS)
+    assert len(first) == 1
+    QUERIES["ml_fit_quality_bound"](spark, SF_DIR)
+    assert _ARTIFACTS == first
+    (key,) = first
+    assert _ARTIFACTS[key] is first[key]
+
+
+def test_cold_refit_is_deterministic(spark):
+    """With an empty memo a query refits from scratch; the refit must
+    reproduce the first fit's output exactly, so the bound twin that
+    audits the session's model sees the same model either way."""
+    from sparkml_spark.registry import QUERIES
+    from sparkml_spark.session import _ARTIFACTS
+
+    r1 = sorted(tuple(r) for r in QUERIES["ml_classify_logistic"](spark, SF_DIR).collect())
+    _ARTIFACTS.clear()
+    r2 = sorted(tuple(r) for r in QUERIES["ml_classify_logistic"](spark, SF_DIR).collect())
+    assert r1 == r2
+    bound = QUERIES["ml_fit_quality_bound"](spark, SF_DIR)
+    assert [r["n_violations"] for r in bound.collect()] == [0]
+
+
+def test_registry_drops_entries_of_stopped_sessions(spark):
+    from sparkml_spark import session
+
+    session.reap_registered(spark)
+    session._REAPABLE.append(("app-stopped-long-ago", 12345))
+    session.reap_later(spark.range(3).cache())
+    session.reap_later(spark.range(2))  # owns no blocks: not registered
+    assert [a for a, _ in session._REAPABLE] == [spark.sparkContext.applicationId]
+    assert session.reap_registered(spark) == 1
