@@ -23,6 +23,7 @@ from sparkml_spark.session import reap_later, session_artifact
 from sparkml_spark.sources.loader import load_table
 
 SEED = 42
+_HAS_SUMMARY = "org.apache.spark.ml.util.HasTrainingSummary"
 
 
 def _features(spark, sf_dir):
@@ -42,28 +43,26 @@ def _train_test(df):
 
 
 def _strip_summary(model):
-    """Drop a fitted model's training summary via a save/load round-trip
-    (loaded models carry none). Binary-classification summaries hold a
-    SparkSession reference; shipping such a model inside the transform
-    UDF closure hits `Task not serializable: ObservationManager` once
-    the session has served an `observe()` query (observed on PySpark
-    4.1.2 — any long-lived session that mixes telemetry and ML scoring,
-    exactly what a 1000-executor job server does). Cost: one local
-    metadata write, ~1 s."""
-    import shutil
-    import tempfile
+    """Drop a fitted model's training summaries IN PLACE and return the
+    same object: `setSummary(None)` on every JVM `HasTrainingSummary`
+    model, recursing into Pipeline stages and OneVsRest sub-models.
+    A summary holds a SparkSession reference, and a model shipped with
+    one in its transform closure dies with `Task not serializable:
+    ObservationManager` once the session has served an `observe()`
+    query (PySpark 4.1.2). Callers must not read `.summary` afterwards.
+    One py4j call per model and no Spark job (a save/load round trip
+    cost 5 jobs, ~0.45 s)."""
+    from py4j.java_gateway import is_instance_of
+    from pyspark import SparkContext
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.classification import OneVsRestModel
 
-    # Explicit file: URI so save/load and the local rmtree always agree
-    # on the filesystem — a scheme-less absolute path resolves against
-    # fs.defaultFS, which is NOT the local disk on a real cluster
-    # (ADVICE r01: the artifact would leak to the cluster FS while
-    # cleanup scrubbed local /tmp).
-    path = tempfile.mkdtemp(prefix="sparkml_model_")
-    try:
-        model.write().overwrite().save("file://" + path)
-        return type(model).load("file://" + path)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    if isinstance(model, (PipelineModel, OneVsRestModel)):
+        for sub in model.stages if isinstance(model, PipelineModel) else model.models:
+            _strip_summary(sub)
+    elif is_instance_of(SparkContext._gateway, model._java_obj, _HAS_SUMMARY):
+        model._java_obj.setSummary(SparkContext._jvm.scala.Option.empty())
+    return model
 
 
 @query("ml_feature_text_pipeline", section="2.J")
@@ -290,18 +289,19 @@ def ml_fit_quality_bound(spark, sf_dir):
     test accuracy IS random ~0.1 by construction, so generalization
     can't be pinned; what can is that LBFGS actually optimizes: train
     accuracy is 0.41-0.45 tri-scale, floor 0.2, and a broken fit
-    degenerates to ~0.1), and (b)
-    seeded KMeans(k=16) must produce 16 NON-EMPTY clusters (a
-    collapsed/degenerate quantizer empties cells — the same failure
-    that would gut sim_ivf_ann's probes). Deterministic: LBFGS and
-    seeded k-means on a fixed key-split. Violations pinned to 0."""
+    degenerates to ~0.1), and (b) the IVF coarse quantizer
+    (seeded KMeans k=16, `build_ivf_index`) must leave 16 NON-EMPTY
+    cells (a collapsed/degenerate quantizer empties cells — the
+    failure that would gut sim_ivf_ann's probes). Deterministic: LBFGS
+    and seeded k-means on a fixed key-split. Violations pinned to 0."""
     from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.clustering import KMeans
 
-    feats = _features(spark, sf_dir)
-    train, _test = _train_test(feats)
-    # r14: same estimator+params+split as ml_classify_logistic — audit
-    # the session's one fitted model (session_artifact) instead of refitting
+    from sparkml_spark.operators.llm_similarity import build_ivf_index
+
+    train, _test = _train_test(_features(spark, sf_dir))
+    # Audit the session's fitted models instead of refitting: the
+    # logistic fit ml_classify_logistic memoizes (same estimator, params
+    # and split) and the quantizer sim_ivf_ann probes.
     lr_est = LogisticRegression(maxIter=25, regParam=0.01)
     lr = session_artifact(spark, (lr_est, train), lambda: _strip_summary(lr_est.fit(train)))
     acc = lr.transform(train).agg(
@@ -310,13 +310,8 @@ def ml_fit_quality_bound(spark, sf_dir):
             / F.count(F.lit(1))
         ).alias("acc")
     )
-    km = _strip_summary(KMeans(k=16, seed=42).fit(feats))
-    n_cells = (
-        km.transform(feats)
-        .groupBy("prediction")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.count(F.lit(1)).alias("n_nonempty"))
-    )
+    assign, _centroids = build_ivf_index(spark, sf_dir)
+    n_cells = assign.agg(F.count_distinct("cell").alias("n_nonempty"))
     viol = (F.col("acc") < 0.2).cast("bigint") + (
         F.col("n_nonempty") != 16
     ).cast("bigint")

@@ -140,6 +140,9 @@ def test_estimator_fingerprint_ignores_uids_and_sees_nested_params(spark):
 
 
 def test_memo_shares_fit_between_query_and_bound_twin(spark):
+    """The bound twin reuses the logistic fit and adds one entry: the
+    IVF quantizer that sim_ivf_ann probes."""
+    from sparkml_spark.operators.llm_similarity import build_ivf_index
     from sparkml_spark.registry import QUERIES
     from sparkml_spark.session import _ARTIFACTS
 
@@ -148,9 +151,35 @@ def test_memo_shares_fit_between_query_and_bound_twin(spark):
     first = dict(_ARTIFACTS)
     assert len(first) == 1
     QUERIES["ml_fit_quality_bound"](spark, SF_DIR)
-    assert _ARTIFACTS == first
+    assert all(k in _ARTIFACTS and _ARTIFACTS[k] is v for k, v in first.items())
+    (new_key,) = set(_ARTIFACTS) - set(first)
+    assert _ARTIFACTS[new_key] is build_ivf_index(spark, SF_DIR)
     (key,) = first
     assert _ARTIFACTS[key] is first[key]
+
+
+def test_quality_bound_warm_build_launches_no_jobs(spark):
+    """Once its logistic fit and IVF quantizer are memoized, rebuilding
+    ml_fit_quality_bound launches no Spark job and adds no memo entry."""
+    from sparkml_spark.registry import QUERIES
+    from sparkml_spark.session import _ARTIFACTS
+
+    sc = spark.sparkContext
+
+    def build_jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            QUERIES["ml_fit_quality_bound"](spark, SF_DIR)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _ARTIFACTS.clear()
+    assert build_jobs("quality_bound_cold_build") > 0
+    n = len(_ARTIFACTS)
+    assert build_jobs("quality_bound_warm_build") == 0
+    assert len(_ARTIFACTS) == n
 
 
 def test_cold_refit_is_deterministic(spark):
